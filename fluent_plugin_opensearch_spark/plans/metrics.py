@@ -1,13 +1,13 @@
-"""Zero-extra-pass metrics via ``df.observe`` (SURVEY.md §2.5 A2):
-the error-handler's stats counters re-expressed as Observation
-aggregates collected DURING the sink write — no second scan of the
-batch, which at 100 TB is the difference between 1× and 2× IO."""
+"""Approximate monitoring primitives (SURVEY.md §2.5): mergeable
+count-min and HyperLogLog sketches and the per-sink profile. The
+batch commit's own counters (rows per sink, DLQ rows per reason) are
+taken from its writes in ``plans.pipeline.commit_batch``."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -232,17 +232,3 @@ def cms_estimate(
     )
     return joined.groupBy(key_col).agg(F.min("cnt").cast("long").alias("est_count"))
 
-
-def observe_pipeline_stats(df: DataFrame, name: str = "pipeline_stats") -> tuple[DataFrame, Observation]:
-    """Attach the A1/A2-style counters to the batch plan. After the
-    batch is materialized (written), ``observation.get`` returns:
-    rows, parse_errors, null_records, distinct-sink lower bound."""
-    obs = Observation(name)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("parse_errors"),
-        F.sum(F.when(F.col("malformed_record"), 1).otherwise(0)).alias("null_records"),
-        F.approx_count_distinct("_index").alias("approx_sinks"),
-    )
-    return observed, obs

@@ -2,17 +2,20 @@
 re-expressed Spark-first):
 
     read transcripts → parse (vectorized) → enrich (broadcast join)
-    → compute @timestamp/_index/_id/routing → fan-out:
-        good    → sink tables (partitionBy _index)
+    → compute @timestamp/_index/_id/routing → ``commit_batch``:
+        good    → sink table (partitionBy _index)
         dlq     → dlq table (reason column)
-        retry   → retry table under retry_tag (R8)
-    + per-sink metrics (A1) + lineage + checkpoint manifest.
+    + per-sink and per-reason counts taken from those two writes (A1)
+    + metrics JSONL + checkpoint manifest (``run_batch``).
+
+``run_batch`` and the pipeline stream both commit through
+``commit_batch``; the retry table (R8) is ``plans.retry``'s.
 
 Stages are pure ``DataFrame -> DataFrame`` functions composed with
 ``df.transform`` (the genid-filter composability analog, SURVEY.md
 §2.10) so Catalyst sees ONE logical plan: filters and the regex parse
 push into the scan, the dictionary joins broadcast, and the only
-shuffle in the whole job is the final repartition on ``_index``.
+shuffle in the plain job is the final repartition on ``_index``.
 """
 
 from __future__ import annotations
@@ -21,16 +24,15 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..constants import INDEX_KEY
+from ..constants import ID_KEY, INDEX_KEY
 from ..operators.enrich import enrich
 from ..operators.genid import add_hash_id
 from ..operators.parse import parse_text
-from ..constants import ID_KEY
-from ..operators.routing import affinity_enabled, affinity_override, per_sink_counts, route
+from ..operators.routing import affinity_enabled, affinity_override, route
 from ..operators.timestamps import inject_timestamp
 from ..operators.transforms import (
     drop_non_records,
@@ -67,6 +69,10 @@ def build(df: DataFrame, cfg: PipelineConfig, spark: SparkSession, tag: str = "t
     if cfg.genid_record_keys or cfg.genid_use_entire_record:
         out = add_hash_id(out, cfg)
     return out
+
+
+#: DLQ reasons in ``split_streams``' precedence order
+DLQ_REASONS = ("null_record", "parse_error", "time_parse_error", "missing_id")
 
 
 def split_streams(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
@@ -145,6 +151,64 @@ class CheckpointManifest:
         os.replace(tmp, self.path)
 
 
+def commit_batch(
+    built: DataFrame,
+    cfg: PipelineConfig,
+    catalog: SinkCatalog,
+    spark: SparkSession,
+    marker: str | None = None,
+) -> tuple[dict[str, int] | None, dict[str, int] | None]:
+    """The write(chunk) commit of ``run_batch`` and the pipeline stream:
+    split, affinity and chunk id when configured, then both appends.
+    Counts come from the writes, with no job after them: rows per sink
+    from the staged files' parquet footers, DLQ rows per reason from an
+    ``observe`` on the DLQ write. Returns ``(per_sink, dlq_by_reason)``;
+    either is None when its table already holds ``marker``. Markers are
+    per table, so a retry after a crash between the two commits
+    completes only the missing append."""
+    good, dlq = split_streams(built, cfg)
+    # gate BEFORE building the lookup — sink_id_state lists/reads the
+    # sink's version dirs eagerly, a cost non-affinity batches must
+    # not pay
+    if affinity_enabled(cfg):
+        good = apply_affinity(good, cfg, sink_id_state(spark, catalog, cfg))
+    # P7 gating (out_opensearch.rb:182,847-854): the chunk id only when
+    # include_chunk_id is configured
+    if cfg.include_chunk_id:
+        good = inject_chunk_id(good, cfg.chunk_id_key)
+    # skew knob (SURVEY.md §4 item 1): salting needs an explicit
+    # repartition, so default the partition count to the parallelism
+    parts = cfg.sink_partitions
+    if cfg.salt_buckets > 0 and parts == 0:
+        parts = spark.sparkContext.defaultParallelism
+    obs = Observation()
+    dlq = dlq.observe(
+        obs, *[F.count(F.when(F.col("dlq_reason") == r, 1)).alias(r) for r in DLQ_REASONS]
+    )
+
+    # one pass over the input feeds both sides; cache the narrow built
+    # plan so good/dlq don't rescan it
+    built.persist()
+    try:
+        per_sink = append_to_sink(
+            good,
+            catalog,
+            "sink",
+            parts,
+            writers_per_sink=max(1, cfg.salt_buckets),
+            target_file_size_bytes=cfg.target_file_size_bytes,
+            marker=marker,
+        )
+        wrote_dlq = append_to_sink(
+            dlq.withColumn(INDEX_KEY, F.lit("dlq")), catalog, "dlq", marker=marker
+        )
+    finally:
+        built.unpersist()
+    # a skipped append never fires the observation, and .get would block
+    by_reason = None if wrote_dlq is None else {r: n for r, n in obs.get.items() if n}
+    return per_sink, by_reason
+
+
 def run_batch(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -153,66 +217,31 @@ def run_batch(
     batch_id: str | None = None,
     manifest: CheckpointManifest | None = None,
 ) -> dict:
-    """One micro-batch: build → split → fan-out writes → metrics.
+    """One batch: build → ``commit_batch`` → metrics (per-sink counts
+    A1 + DLQ rows by reason A2), §3.1's write(chunk) shape.
 
-    Mirrors §3.1's write(chunk) shape with Spark semantics: the retry
-    stream is a TABLE consumed by the next run (R8 as an idempotent
-    loop, SURVEY.md §2.3), not a recursive emit. Returns the metrics
-    dict (per-sink counts A1 + outcome stats A2).
+    With a ``manifest`` both appends commit under the batch id as their
+    marker, so a resume after a partial commit completes only the
+    missing table; ``already_committed`` names the tables an earlier
+    attempt wrote, whose rows these metrics do not count.
     """
     batch_id = batch_id or uuid.uuid4().hex[:12]
     if manifest is not None and manifest.is_done(batch_id):
         return {"batch_id": batch_id, "skipped": True}
 
-    built = build(transcripts, cfg, spark)
-    good, dlq = split_streams(built, cfg)
-    # gate BEFORE building the lookup — sink_id_state lists/reads the
-    # sink's version dirs eagerly, a cost non-affinity batches must
-    # not pay
-    if affinity_enabled(cfg):
-        good = apply_affinity(good, cfg, sink_id_state(spark, catalog, cfg))
-    # P7 gating (out_opensearch.rb:182,847-854): the reference injects
-    # the chunk id only when include_chunk_id is configured; r2 applied
-    # it unconditionally (VERDICT r2 "What's missing" item 3)
-    if cfg.include_chunk_id:
-        good = inject_chunk_id(good, cfg.chunk_id_key)
-
-    # one pass over the input feeds both sides; cache the narrow built
-    # plan so good/dlq don't rescan (at cluster scale: two reads of one
-    # cached/shuffled dataset beat two source scans)
-    built.persist()
-    try:
-        # skew knob (SURVEY.md §4 item 1): salt_buckets > 0 spreads a
-        # hot sink over that many writers (stable-column salt inside
-        # append_to_sink); it needs an explicit repartition, so default
-        # the partition count to the cluster parallelism when unset
-        parts = cfg.sink_partitions
-        if cfg.salt_buckets > 0 and parts == 0:
-            parts = spark.sparkContext.defaultParallelism
-        append_to_sink(
-            good,
-            catalog,
-            "sink",
-            parts,
-            writers_per_sink=max(1, cfg.salt_buckets),
-            target_file_size_bytes=cfg.target_file_size_bytes,
-        )
-        dlq_out = dlq.withColumn(INDEX_KEY, F.lit("dlq"))
-        append_to_sink(dlq_out, catalog, "dlq")
-
-        counts = [r.asDict() for r in per_sink_counts(good).collect()]
-        dlq_counts = [
-            r.asDict() for r in dlq.groupBy("dlq_reason").agg(F.count(F.lit(1)).alias("n")).collect()
-        ]
-    finally:
-        built.unpersist()
-
+    per_sink, dlq = commit_batch(
+        build(transcripts, cfg, spark), cfg, catalog, spark,
+        marker=batch_id if manifest is not None else None,
+    )
+    counts = [{INDEX_KEY: k, "routed_rows": n} for k, n in sorted((per_sink or {}).items())]
+    dlq_counts = [{"dlq_reason": r, "n": n} for r, n in (dlq or {}).items()]
     metrics = {
         "batch_id": batch_id,
         "per_sink": counts,
         "dlq": dlq_counts,
-        "routed_rows": int(sum(c["routed_rows"] for c in counts)),
-        "dlq_rows": int(sum(c["n"] for c in dlq_counts)),
+        "routed_rows": sum(c["routed_rows"] for c in counts),
+        "dlq_rows": sum(c["n"] for c in dlq_counts),
+        "already_committed": [t for t, c in (("sink", per_sink), ("dlq", dlq)) if c is None],
     }
     write_metrics(catalog, batch_id, counts + [metrics])
     if manifest is not None:

@@ -405,6 +405,23 @@ def _prune_markers(markers: set[str], keep: int = MARKERS_KEPT_PER_STREAM) -> li
     return sorted(kept)
 
 
+def _staged_rows(vdir: str) -> dict[str, int]:
+    """Rows per RAW partition value in a version dir, summed from the
+    parquet footers of the files just written (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    rows = {}
+    for d in os.listdir(vdir):
+        if d.startswith(INDEX_KEY + "="):
+            pdir = os.path.join(vdir, d)
+            rows[_unescape_part(d.split("=", 1)[1])] = sum(
+                pq.read_metadata(os.path.join(pdir, f)).num_rows
+                for f in os.listdir(pdir)
+                if f.endswith(".parquet")
+            )
+    return rows
+
+
 def _staged_partitions(vdir: str) -> list[str]:
     """RAW partition values staged in a version dir (dir names are
     Hive-escaped; the manifest and all `_index` comparisons use raw
@@ -424,7 +441,7 @@ def append_to_sink(
     writers_per_sink: int = 1,
     target_file_size_bytes: int = 0,
     marker: str | None = None,
-) -> bool:
+) -> dict[str, int] | None:
     """S6/S7: the bulk append — ``partitionBy(_index)`` fans rows out
     to per-sink directories in one job (data-stream mode S7 is exactly
     this, append-only). The write stages an immutable version dir and
@@ -453,14 +470,14 @@ def append_to_sink(
     request-splitting knob re-expressed declaratively.
 
     ``marker`` makes the append idempotent: if the token was already
-    committed the write is skipped entirely (returns False), else the
+    committed the write is skipped entirely (returns None), else the
     token commits atomically with the data — the exactly-once pattern
-    for foreachBatch re-deliveries. Returns True when data was
-    written.
+    for foreachBatch re-deliveries. Returns ``{_index: rows}`` of the
+    committed append, read from the staged files' parquet footers.
     """
     catalog.ensure(table)
     if marker is not None and catalog.has_marker(table, marker):
-        return False
+        return None
     out = df
     if sink_partitions > 0:
         if writers_per_sink > 1:
@@ -481,8 +498,9 @@ def append_to_sink(
         )
     version, vdir = catalog.stage(table)
     writer.parquet(vdir)
-    catalog.commit(table, version, _staged_partitions(vdir), replace=False, marker=marker)
-    return True
+    rows = _staged_rows(vdir)
+    catalog.commit(table, version, sorted(rows), replace=False, marker=marker)
+    return rows
 
 
 def _estimate_row_bytes(df: DataFrame) -> int:

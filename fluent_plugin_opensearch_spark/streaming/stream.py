@@ -1,13 +1,15 @@
 """Structured Streaming wrapper (SURVEY.md §2.9): the reference's
 buffer + flush_interval micro-batching maps to ``foreachBatch`` with a
-processing-time (or availableNow) trigger; the SAME batch stage
-functions run inside each micro-batch, so batch and streaming share one
-code path — mirroring fluentd's chunk-flush model where ``write(chunk)``
-is the unit either way.
+processing-time (or availableNow) trigger. Each pipeline micro-batch
+runs ``build`` and then ``plans.pipeline.commit_batch``, the same
+commit ``run_batch`` makes, so batch and streaming share one code path,
+config options and counts included — mirroring fluentd's chunk-flush
+model where ``write(chunk)`` is the unit either way.
 
 Checkpointing: Spark's offset/commit log gives exactly-once per source
-offset; the chunk-id column (P7) plus idempotent sink MERGE provide the
-replay-dedup the reference gets from chunk ids
+offset; per-table idempotence markers committed with the data make a
+re-delivered micro-batch skip what it already wrote, and the chunk id
+(P7) marks rows for the replay-dedup the reference gets from chunk ids
 (out_opensearch.rb:847-854).
 """
 
@@ -18,7 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PipelineConfig
-from ..plans.pipeline import build, split_streams
+from ..plans.pipeline import build, commit_batch
+# unused here; kept so perfbench's tracer (probes.instrument) can wrap stream.split_streams
+from ..plans.pipeline import split_streams  # noqa: F401
 from ..sinks.writer import SinkCatalog, append_to_sink
 
 #: transcripts schema for file streams (input_hint)
@@ -53,6 +57,16 @@ def _checkpoint_instance_id(checkpoint_dir: str) -> str:
         pass
     with open(nonce_path) as f:
         return f.read().strip()[:8]
+
+
+def _start(writer, process, checkpoint_dir: str, available_now: bool, processing_time: str):
+    """Start ``writer`` with ``process`` as its foreachBatch sink under
+    ``checkpoint_dir``: availableNow drains the backlog and stops, else
+    a micro-batch fires every ``processing_time``."""
+    writer = writer.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=processing_time).start()
 
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -101,44 +115,16 @@ def start_pipeline_stream(
     stream_id = _checkpoint_instance_id(checkpoint_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        marker = f"stream-{stream_id}-{batch_id}"
         built = build(batch_df, cfg, spark)
-        good, dlq = split_streams(built, cfg)
-        # one cached evaluation feeds both appends + the counts
-        # (run_batch does the same; without it each read rescans the
-        # source through the whole build plan)
-        built.persist()
-        try:
-            marker = f"stream-{stream_id}-{batch_id}"
-            # markers are PER TABLE: a crash between the two commits
-            # re-delivers the batch and each table independently skips
-            # or completes its own append — neither loses rows nor
-            # double-appends (the sink-committed/dlq-pending window)
-            wrote_good = append_to_sink(
-                good, catalog, "sink", cfg.sink_partitions, marker=marker
-            )
-            append_to_sink(
-                dlq.withColumn("_index", F.lit("dlq")), catalog, "dlq", marker=marker
-            )
-            if wrote_good:
-                counts = {
-                    r["_index"]: r["routed_rows"]
-                    for r in good.groupBy("_index")
-                    .agg(F.count(F.lit(1)).alias("routed_rows"))
-                    .collect()
-                }
-                metrics.append({"batch_id": batch_id, "per_sink": counts})
-        finally:
-            built.unpersist()
+        per_sink, dlq = commit_batch(built, cfg, catalog, spark, marker=marker)
+        if per_sink is not None:
+            metrics.append({"batch_id": batch_id, "per_sink": per_sink, "dlq": dlq})
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             catalog.compact(spark, "sink")
             catalog.compact(spark, "dlq")
 
-    writer = source.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
+    query = _start(source.writeStream, process, checkpoint_dir, available_now, processing_time)
     query._pipeline_metrics = metrics  # exposed for tests/observability
     return query
 
@@ -293,16 +279,8 @@ def heavy_hitter_rollup_stream(
         ).withColumn("_id", F.concat_ws("|", "hour", key_col))
         merge_write(spark, batch, catalog, cfg, table=table)
 
-    writer = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = counts.writeStream.outputMode("update")
+    return _start(writer, process, checkpoint_dir, available_now, processing_time)
 
 
 def top_k_from_rollup(rollup: DataFrame, k: int = 3) -> DataFrame:
@@ -397,16 +375,8 @@ def index_stream(
         finally:
             docs.unpersist()
 
-    writer = (
-        source.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = source.writeStream.outputMode("append")
+    return _start(writer, process, checkpoint_dir, available_now, processing_time)
 
 
 def template_drift_stream(
@@ -659,16 +629,8 @@ def _upsert_rollup_stream(
         batch = batch_df.withColumn("_index", index_expr).withColumn("_id", id_expr)
         merge_write(spark, batch, catalog, cfg, table=table)
 
-    writer = (
-        frame.writeStream.outputMode("update")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = frame.writeStream.outputMode("update")
+    return _start(writer, process, checkpoint_dir, available_now, processing_time)
 
 
 def hll_registers_stream(
@@ -900,7 +862,7 @@ def ingest_dedup_stream(
                     "batch_id": batch_id,
                     "n_in": batch_df.count(),
                     "n_accepted": accepted.count(),
-                    "committed": bool(wrote),
+                    "committed": wrote is not None,
                 }
             )
         finally:
@@ -908,13 +870,6 @@ def ingest_dedup_stream(
             for f in handle:
                 f.unpersist()
 
-    writer = source.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
+    query = _start(source.writeStream, process, checkpoint_dir, available_now, processing_time)
     query._ingest_metrics = metrics  # exposed for tests/observability
     return query

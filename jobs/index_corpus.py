@@ -92,7 +92,7 @@ def main(argv: list[str]) -> None:
                     marker=marker,
                 )
                 append_to_sink(st, cat, "search_stats", marker=marker)
-                stats = {"input": clean.count(), "skipped": not wrote}
+                stats = {"input": clean.count(), "skipped": wrote is None}
             finally:
                 clean.unpersist()
         print(json.dumps({"mode": "ingest", "upsert": args.upsert, **stats}))

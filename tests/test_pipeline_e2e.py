@@ -3,6 +3,7 @@ counts (SURVEY.md §7 Phase 0 — exercises S1, P3, R2, R6, A1)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluent_plugin_opensearch_spark import (
@@ -30,13 +31,16 @@ def test_build_schema(spark):
         assert c in cols, c
 
 
-def test_per_sink_counts_match_duckdb(spark):
+def test_per_sink_counts_match_duckdb(spark, tmp_path):
     """Per-sink routed-row counts — the graft's headline correctness
-    metric (A1) — vs an independent DuckDB computation."""
+    metric (A1) — vs an independent DuckDB computation, both as a
+    groupBy over the good rows and as the counts ``run_batch`` reads
+    from the footers of the files it wrote; and ``run_batch``'s DLQ
+    counts per reason vs a groupBy over the DLQ rows."""
     import duckdb
 
     t = load_transcripts(spark, SF_SMOKE)
-    good, _ = split_streams(build(t, CFG, spark), CFG)
+    good, dlq = split_streams(build(t, CFG, spark), CFG)
     got = {
         r["_index"]: r["routed_rows"]
         for r in good.groupBy("_index").agg(F.count(F.lit(1)).alias("routed_rows")).collect()
@@ -59,6 +63,16 @@ def test_per_sink_counts_match_duckdb(spark):
     )
     assert got == want
     assert sum(got.values()) > 0
+    m = run_batch(spark, t, CFG, SinkCatalog(str(tmp_path / "wh")), batch_id="b")
+    assert {r["_index"]: r["routed_rows"] for r in m["per_sink"]} == want
+
+    # DLQ rows per reason (A2), observed on the DLQ write, equal a
+    # groupBy; parse errors and null records exist by construction
+    want_dlq = {r["dlq_reason"]: r["count"] for r in dlq.groupBy("dlq_reason").count().collect()}
+    got_dlq = {r["dlq_reason"]: r["n"] for r in m["dlq"]}
+    assert got_dlq == want_dlq
+    assert got_dlq["parse_error"] > 0 and got_dlq["null_record"] > 0
+    assert m["dlq_rows"] == sum(want_dlq.values())
 
 
 def test_affinity_config_wiring_e2e(spark, tmp_path):
@@ -151,6 +165,36 @@ def test_run_batch_and_resume(spark, tmp_path):
     src = t.filter(F.col("text").isNotNull()).orderBy("conv_id", "turn_idx")
     n_src = src.count()
     assert sink.count() + dlq.filter(F.col("dlq_reason") != "null_record").count() == n_src
+
+
+def test_run_batch_resume_after_failed_dlq_commit(spark, tmp_path, monkeypatch):
+    """Crash between the two commits: the sink append committed, the DLQ
+    commit failed. A resume with the same manifest must complete only
+    the DLQ; the sink keeps exactly one copy of the batch."""
+    t = load_transcripts(spark, SF_SMOKE)
+    ref = run_batch(spark, t, CFG, SinkCatalog(str(tmp_path / "ref")), batch_id="b1")
+    cat = SinkCatalog(str(tmp_path / "wh"))
+    manifest = CheckpointManifest(str(tmp_path / "manifest.json"))
+
+    real_commit = SinkCatalog.commit
+
+    def failing_commit(self, table, *a, **kw):
+        if table == "dlq":
+            raise RuntimeError("dlq commit failure")
+        return real_commit(self, table, *a, **kw)
+
+    monkeypatch.setattr(SinkCatalog, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="dlq commit failure"):
+        run_batch(spark, t, CFG, cat, batch_id="b1", manifest=manifest)
+    assert not manifest.is_done("b1")
+    monkeypatch.setattr(SinkCatalog, "commit", real_commit)
+
+    m = run_batch(spark, t, CFG, cat, batch_id="b1", manifest=manifest)
+    assert cat.read(spark, "sink").count() == ref["routed_rows"]
+    assert cat.read(spark, "dlq").count() == ref["dlq_rows"]
+    assert m["already_committed"] == ["sink"]
+    assert m["dlq"] == ref["dlq"]
+    assert manifest.is_done("b1")
 
 
 def test_sink_id_state_scoped_to_prefix(spark, tmp_path):

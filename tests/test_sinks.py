@@ -207,10 +207,10 @@ def test_append_marker_is_exactly_once(spark, tmp_path):
     the same atomic manifest flip as the data)."""
     cat = SinkCatalog(str(tmp_path))
     df = _df(spark, [("a", "i1", 1)])
-    assert append_to_sink(df, cat, "sink", marker="b0") is True
-    assert append_to_sink(df, cat, "sink", marker="b0") is False  # re-delivery
+    assert append_to_sink(df, cat, "sink", marker="b0") == {"i1": 1}
+    assert append_to_sink(df, cat, "sink", marker="b0") is None  # re-delivery
     assert cat.read(spark, "sink").count() == 1
-    assert append_to_sink(df, cat, "sink", marker="b1") is True
+    assert append_to_sink(df, cat, "sink", marker="b1") == {"i1": 1}
     assert cat.read(spark, "sink").count() == 2
 
 

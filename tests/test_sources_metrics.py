@@ -1,11 +1,10 @@
-"""S5 docinfo lineage, P13 partial-update semantics, A2 observe metrics."""
+"""S5 docinfo lineage, P13 partial-update semantics, chunk-id gating, A2 commit counters, sketches."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from fluent_plugin_opensearch_spark import PipelineConfig, SinkCatalog, build, merge_write
-from fluent_plugin_opensearch_spark.plans.metrics import observe_pipeline_stats
 from fluent_plugin_opensearch_spark.sources.reader import scan_with_docinfo, with_slices
 
 from .conftest import SF_SMOKE
@@ -71,10 +70,15 @@ def test_suppress_doc_wrap_replaces_wholesale(spark, tmp_path):
 
 def test_chunk_id_injection_gated(spark, tmp_path):
     """include_chunk_id/chunk_id_key gating (out_opensearch.rb:182-183,
-    847-854): run_batch injects the chunk id only when configured, under
-    the configured key (VERDICT r2 'What's missing' item 3)."""
+    847-854): run_batch and the pipeline stream inject the chunk id only
+    when configured, under the configured key (VERDICT r2 'What's
+    missing' item 3)."""
     from fluent_plugin_opensearch_spark import load_transcripts
     from fluent_plugin_opensearch_spark.plans.pipeline import run_batch
+    from fluent_plugin_opensearch_spark.streaming.stream import (
+        read_transcript_stream,
+        start_pipeline_stream,
+    )
 
     t = load_transcripts(spark, SF_SMOKE).limit(200)
     off = PipelineConfig(logstash_format=True, logstash_prefix="logs")
@@ -92,19 +96,38 @@ def test_chunk_id_injection_gated(spark, tmp_path):
     assert "my_chunk" in sink.columns
     assert sink.filter(F.col("my_chunk").isNull()).count() == 0
 
+    # the stream commits through the same path, so it honours the option
+    src = str(tmp_path / "src")
+    t.write.parquet(src)
+    cat3 = SinkCatalog(str(tmp_path / "stream"))
+    q = start_pipeline_stream(
+        spark, read_transcript_stream(spark, src), on, cat3, str(tmp_path / "ck")
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    streamed = cat3.read(spark, "sink")
+    assert "my_chunk" in streamed.columns
+    assert streamed.count() > 0
+    assert streamed.filter(F.col("my_chunk").isNull()).count() == 0
 
-def test_observe_metrics_single_pass(spark):
+
+def test_observe_metrics_single_pass(spark, tmp_path):
+    """A2: the commit's counters come from its own writes (parquet
+    footers for the sink, an ``observe`` on the DLQ write), with no
+    second scan of the batch, and agree with the rows written."""
     from fluent_plugin_opensearch_spark import load_transcripts
+    from fluent_plugin_opensearch_spark.plans.pipeline import commit_batch
 
     cfg = PipelineConfig(logstash_format=True, logstash_prefix="logs")
     built = build(load_transcripts(spark, SF_SMOKE), cfg, spark)
-    observed, obs = observe_pipeline_stats(built)
-    total = observed.count()  # one materialization
-    stats = obs.get
-    assert stats["rows"] == total
-    assert stats["parse_errors"] > 0
-    assert stats["null_records"] > 0
-    assert stats["approx_sinks"] >= 25  # ~30 UTC days in the data
+    cat = SinkCatalog(str(tmp_path / "wh"))
+    per_sink, by_reason = commit_batch(built, cfg, cat, spark)
+    assert sum(per_sink.values()) == cat.read(spark, "sink").count()
+    assert sum(by_reason.values()) == cat.read(spark, "dlq").count()
+    assert sum(per_sink.values()) + sum(by_reason.values()) == built.count()
+    assert by_reason["parse_error"] > 0
+    assert by_reason["null_record"] > 0
+    assert len(per_sink) >= 25  # ~30 UTC days in the data
 
 
 def test_per_record_update_exclusion(spark, tmp_path):

@@ -47,6 +47,8 @@ def test_stream_available_now_matches_batch(spark, tmp_path):
 
     good, _ = split_streams(build(load_transcripts(spark, SF_SMOKE), CFG, spark), CFG)
     assert sink.count() == good.count()
+    # the per-batch counts come from the writes and add up to the sink
+    assert sum(n for m in q._pipeline_metrics for n in m["per_sink"].values()) == good.count()
     # restart on same checkpoint: no new data → no duplicates
     q2 = start_pipeline_stream(
         spark, read_transcript_stream(spark, src_dir), CFG, cat, str(tmp_path / "ckpt")
