@@ -4,7 +4,7 @@ guide §1.4 noop-sink isolation + interleaved A/B live here).
 Usage:
   python bench_extra.py time  <sf_dir> <reps> <query> [query ...]
       Per-query timings with bench.py's exact methodology (force =
-      df.count()) after the same sf0.001 warmup, `reps` passes each,
+      df.count()) after the same smoke-scale warmup, `reps` passes each,
       interleaved across the listed queries (A/B/A/B...) so VM weather
       hits all variants equally (CLAUDE.md: sequential comparisons on
       this VM are worthless).
@@ -28,6 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import warmup_dir  # noqa: E402
 from fluent_plugin_opensearch_spark.plans.queries import QUERIES  # noqa: E402
 from fluent_plugin_opensearch_spark.session import get_spark  # noqa: E402
 
@@ -74,7 +75,7 @@ def main() -> None:
     names = sys.argv[4:]
     # same warmup as bench.py so the first timed query is not charged
     # the JVM/codegen cold start
-    QUERIES["route_logstash_counts"](spark, "/root/testdata/sf0.001").count()
+    QUERIES["route_logstash_counts"](spark, warmup_dir(sf_dir)).count()
 
     def force(df):
         if mode == "noop":

@@ -20,6 +20,7 @@ from ..functions.text import (
     n_chars_in,
     ws_tokens,
 )
+from ..session import local_frame
 
 
 def _ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -1541,8 +1542,8 @@ def ivf_kmeans_topk(
             (sum((x - c) * (x - c) for x, c in zip(qv, cv)), j) for j, cv in cents
         )
         probe_rows.extend((r[id_col], j) for _, j in dists[:n_probe])
-    probes = spark.createDataFrame(probe_rows, "q_id long, cluster int")
-    qvecs = spark.createDataFrame(qvec_rows, "q_id long, qv array<bigint>")
+    probes = local_frame(spark, probe_rows, "q_id long, cluster int")
+    qvecs = local_frame(spark, qvec_rows, "q_id long, qv array<bigint>")
     dist = F.aggregate(
         F.zip_with("_q", "qv", lambda x, c: (x - c) * (x - c)),
         F.lit(0).cast("long"),

@@ -4,7 +4,8 @@ dictionaries mirroring record_transformer + template mappings)").
 
 The dictionaries are small (4–10 rows, FIXTURES.md §2) → always
 broadcast: the join is map-side, zero shuffle, and survives 100× input
-scale unchanged. Misses stay as NULLs, never drops (left join).
+scale unchanged. Misses stay as NULLs, never drops (left join). Every
+table here is a JVM ``LocalRelation`` (``session.local_frame``): zero Python.
 """
 
 from __future__ import annotations
@@ -14,6 +15,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..session import local_frame
 
 #: role_dict(role, role_class, priority) — FIXTURES.md §2
 ROLE_DICT_ROWS = [
@@ -45,12 +48,12 @@ TOOL_DICT_SQL = (
 
 
 def role_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DICT_ROWS, "role string, role_class string, priority int")
+    return local_frame(spark, ROLE_DICT_ROWS, "role string, role_class string, priority int")
 
 
 def tool_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOL_DICT_ROWS, "tool string, tool_family string, is_sandboxed boolean"
+    return local_frame(
+        spark, TOOL_DICT_ROWS, "tool string, tool_family string, is_sandboxed boolean"
     )
 
 
@@ -100,7 +103,8 @@ TOOL_POLICY_SQL = (
 
 
 def tool_policy(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         TOOL_POLICY_ROWS,
         "tool string, valid_from timestamp_ntz, policy string, policy_rev int",
     )
@@ -225,7 +229,8 @@ MAINTENANCE_WINDOWS_SQL = (
 
 
 def maintenance_windows(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         MAINTENANCE_WINDOWS_ROWS,
         "window_id string, starts timestamp_ntz, ends timestamp_ntz, severity string",
     )

@@ -236,31 +236,3 @@ def parse_text_multi(
         out = out.withColumn(f_name, col)
     return out
 
-
-def parse_json_props(df: DataFrame, json_col: str, fields: dict[str, str]) -> DataFrame:
-    """JSON side-payload parse (oj_serializer.rb inverse; S9):
-    ``from_json``-style extraction of typed fields from a JSON-string
-    column. ``fields`` maps output column → JSON path type, e.g.
-    ``{"k": "int"}`` extracts ``$.k`` as int."""
-    out = df
-    for name, dtype in fields.items():
-        out = out.withColumn(name, F.get_json_object(F.col(json_col), f"$.{name}").cast(dtype))
-    return out
-
-
-def dlq_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fan the parsed stream into (good, dlq) per the reference's
-    per-record rescue → emit_error_event (out_opensearch.rb:904-908).
-    DLQ rows carry a ``dlq_reason``. Both sides reuse the same parsed
-    plan (no recompute under AQE; cache upstream if both sides are
-    written)."""
-    reason = (
-        F.when(F.col("text").isNull(), F.lit("null_record"))
-        .when(~F.col("parse_ok"), F.lit("parse_error"))
-        .otherwise(F.lit(None))
-    )
-    tagged = df.withColumn("dlq_reason", reason)
-    return (
-        tagged.filter(F.col("dlq_reason").isNull()).drop("dlq_reason"),
-        tagged.filter(F.col("dlq_reason").isNotNull()),
-    )

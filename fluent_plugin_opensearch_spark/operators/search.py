@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokenize_py, unicode_tokens
+from ..session import local_frame
 
 
 def _tokens(text_col: str):
@@ -333,9 +334,7 @@ def search_index(
         # (Between a batch's two appends a query may score one batch's
         # postings against the previous stats — skew bounded by one
         # micro-batch and self-healing on the next commit.)
-        return spark.createDataFrame(
-            [], f"rank int, {id_col} {id_type}, score_micro long"
-        )
+        return local_frame(spark, [], f"rank int, {id_col} {id_type}, score_micro long")
     st = st_raw.agg(
         F.sum("n_docs").alias("n_docs"),
         (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
@@ -566,7 +565,8 @@ def index_upsert_batch(
         #    stats row and an uncommitted merge; re-delivery recomputes
         #    identical pre-merge state and only the merge runs.
         dl_new_sum = gen_frame.agg(F.sum("dl")).first()[0] or 0
-        stats = spark.createDataFrame(
+        stats = local_frame(
+            spark,
             [(n_batch - n_updated, dl_new_sum - dl_old_sum, "stats")],
             "n_docs long, sum_dl long, _index string",
         )
@@ -709,7 +709,7 @@ def phrase_search(
         raise ValueError("phrase has no tokens")
     m = len(terms)
     spark = docs.sparkSession
-    q = spark.createDataFrame(list(enumerate(terms)), "i int, term string")
+    q = local_frame(spark, list(enumerate(terms)), "i int, term string")
     post = positional_postings(
         docs.filter(F.col(text_col).isNotNull()), id_col, text_col
     ).filter(F.col("term").isin(sorted(set(terms))))

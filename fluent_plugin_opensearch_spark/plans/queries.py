@@ -27,6 +27,7 @@ from ..operators.parse import parse_text
 from ..operators.routing import affinity_override, per_sink_counts, route
 from ..operators.timestamps import inject_timestamp
 from ..plans.pipeline import build, split_streams
+from ..session import local_frame
 from ..sources.transcripts import ORACLE_PREFIX, load_transcripts
 
 CFG = PipelineConfig(logstash_format=True, logstash_prefix="logs")
@@ -2871,7 +2872,7 @@ def q_url_blocklist(spark, sf_dir):
     """Domain-blocklist flags over URL-planted docs: per-doc URL and
     blocked-URL counts, subdomain-aware via the suffix-chain
     equi-join (blocklist: example.com, bad.net)."""
-    bl = spark.createDataFrame([("example.com",), ("bad.net",)], ["domain"])
+    bl = local_frame(spark, [("example.com",), ("bad.net",)], "domain string")
     return CU.domain_blocklist_flags(_docs_with_urls(spark, sf_dir), bl)
 
 

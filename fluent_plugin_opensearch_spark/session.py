@@ -13,7 +13,10 @@ Scale posture (tested on local[N], designed for 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -43,3 +46,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl_schema: str) -> DataFrame:
+    """``rows`` (tuples in ``ddl_schema`` column order) as a DataFrame with
+    the names, types and nullability of ``createDataFrame(rows, ddl_schema)``.
+
+    ``createDataFrame(list)`` is banned in product code: classic PySpark
+    makes it a Python RDD, so every plan or broadcast over it forks Python
+    workers to unpickle a few rows. A ``pyarrow.Table`` typed from the
+    Spark schema is decoded in the JVM into a ``LocalRelation`` instead.
+    Not a pandas frame: it fails on zero rows and can silently fall back
+    to the Python-RDD path."""
+    schema = DataType.fromDDL(ddl_schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..constants import ID_KEY, INDEX_KEY, OP_CREATE, OP_INDEX, OP_UPDATE, OP_UPSERT
+from ..session import local_frame
 
 _MANIFEST = "_manifest.json"
 
@@ -726,7 +727,7 @@ def delete_ids(
     runs after the delete stage).
     """
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(str(i),) for i in ids], f"{ID_KEY} string")
+        ids = local_frame(spark, [(str(i),) for i in ids], f"{ID_KEY} string")
     ids = (
         ids.select(F.col(ids.columns[0]).cast("string").alias(ID_KEY))
         .filter(F.col(ID_KEY).isNotNull())

@@ -69,6 +69,36 @@ def test_pipeline_has_no_python_udf_and_single_shuffle(spark):
     # codegen coverage is asserted on the non-AQE parse plan below)
 
 
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_build_has_no_python_rdd_and_local_dictionaries(spark):
+    """No Python worker on the record pipeline: the optimized plan of
+    build() reads only parquet and JVM-local relations (no Python RDD,
+    no Python UDF), and both dictionary broadcasts sit over a
+    LocalRelation."""
+    from fluent_plugin_opensearch_spark import load_transcripts
+
+    built = build(load_transcripts(spark, SF_SMOKE), CFG, spark)
+    qe = built._jdf.queryExecution()
+    nodes = list(_plan_nodes(qe.optimizedPlan()))
+    names = {n.nodeName() for n in nodes}
+    assert not names & {"LogicalRDD", "ExternalRDD", "BatchEvalPython", "ArrowEvalPython"}, names
+    executed = qe.executedPlan().toString()
+    for bad in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython"):
+        assert bad not in executed, executed
+    broadcast_sides = [
+        n.right().nodeName()
+        for n in nodes
+        if n.nodeName() == "Join" and n.hint().rightHint().isDefined()
+    ]
+    assert broadcast_sides == ["LocalRelation", "LocalRelation"], broadcast_sides
+
+
 def test_affinity_build_side_is_batch_bounded(spark):
     """R5 scale guard: the affinity lookup must semi-join the existing
     sink state on the batch's distinct ids BEFORE the min(_index)
